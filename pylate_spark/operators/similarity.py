@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pylate_spark.functions.predicates import in_list
+
 
 def _dot(a, b):
     # NOTE (r7, measured): an unrolled fixed-dim ``a[0]*b[0] + …`` chain
@@ -353,7 +355,7 @@ def ivf_topk_bucketed(
     )
     qb = [int(r["bucket"]) for r in q.select("bucket").distinct().collect()]
     probe_buckets = sorted({b ^ m for b in qb for m in masks})
-    e = spark.read.parquet(path).where(F.col("bucket").isin(probe_buckets))
+    e = spark.read.parquet(path).where(in_list("bucket", probe_buckets))
     if n_probe > 1:
         q = q.withColumn(
             "bucket",
@@ -389,7 +391,8 @@ def probe_recall_curve(
     and :func:`choose_n_probe` falls back to the largest *measured*
     point. At smaller plane counts the last point IS full coverage
     (recall 1.0 by construction — every bucket probed), so the curve
-    reaches any feasible target.
+    reaches any feasible target. An empty ``probes`` list measures
+    nothing and returns ``[]``.
 
     ``exact`` lets callers pass an already-computed/cached
     :func:`cosine_topk` result for the same queries instead of paying
@@ -401,6 +404,8 @@ def probe_recall_curve(
             probes.append(p)
             p *= 2
         probes.append(ceiling)
+    if not probes:
+        return []  # nothing to measure: skip the exact pass too
     own_exact = exact is None
     if own_exact:
         exact = cosine_topk(emb, queries, k=k, **cols).cache()

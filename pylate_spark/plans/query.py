@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from pylate_spark.config import BM25Params, IndexConfig
 from pylate_spark.functions.bm25 import bm25_score_col, idf_np
+from pylate_spark.functions.predicates import in_list
 from pylate_spark.functions.tokenize import (
     TOKEN_PATTERN,
     make_tokenize_udf,
@@ -236,7 +237,7 @@ class InvertedIndex:
                         }
                     )
 
-        seg = self._seg.where(F.col("shard").isin(shards))
+        seg = self._seg.where(in_list("shard", shards))
         return seg.mapInPandas(gen, schema="docid long, term string, tf int, dl int")
 
     # -- tombstones (delete support, index_updater.py:52-69) --------
@@ -260,11 +261,14 @@ class InvertedIndex:
     ) -> DataFrame:
         """Ranked results ``(query_id, rank, docid, score)``.
 
-        ``mode``: ``"auto"`` (per-query strategy selection by (n_terms,
+        ``mode``: ``"auto"`` (batches of more than 8 queries are scored
+        exhaustively, since their kernel decodes every matched list in
+        full; smaller batches select a strategy per query by (n_terms,
         k) — the reference's k-banded parameter presets,
-        ``searcher.py:60-83``), ``"cascade"`` (block-max pruning) or
-        ``"exhaustive"`` (decode everything — the in-engine correctness
-        oracle, the analog of exact MaxSim rescoring). ``subset``
+        ``searcher.py:60-83``; see ``plans/wand.score_shard``),
+        ``"cascade"`` (block-max pruning) or ``"exhaustive"`` (decode
+        everything — the in-engine correctness oracle, the analog of
+        exact MaxSim rescoring). All modes return the same rows. ``subset``
         restricts results to the given docids (the reference's
         allow-list filter, ``fast_plaid.py:318-340``). ``round_to``
         emits float64 scores rounded to that many decimals and ranks by
@@ -287,7 +291,7 @@ class InvertedIndex:
         if missing:
             stats = (
                 self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
-                .where(F.col("term").isin(missing))
+                .where(in_list("term", missing))
                 .select("term", "df")
                 .collect()
             )
@@ -345,7 +349,7 @@ class InvertedIndex:
 
         seg = (
             self._seg
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(vocab_terms))
+            .where(in_list("bucket", buckets) & in_list("term", vocab_terms))
             .select("shard", "term", "df", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off", "payload")
         )
 
@@ -398,7 +402,7 @@ class InvertedIndex:
 
         seg = self._seg
         if buckets is not None:
-            seg = seg.where(F.col("bucket").isin(buckets))
+            seg = seg.where(in_list("bucket", buckets))
         seg = seg.join(terms_df, "term", "left_semi").select(
             "term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off"
         )
@@ -659,7 +663,7 @@ class InvertedIndex:
         # same UB the kernel uses per shard (plans/wand.ShardTerms),
         # here aggregated globally per term
         meta = (
-            self._seg.where(F.col("bucket").isin(buckets))
+            self._seg.where(in_list("bucket", buckets))
             .join(terms, "term", "left_semi")
             .groupBy("term")
             .agg(

@@ -36,6 +36,10 @@ from pylate_spark.plans.segments import blocks_from_row
 
 RESULT_COLUMNS = ["query_id", "docid", "score"]
 
+#: batches of more queries than this decode each matched posting list
+#: of a shard once, in full, and share it (ShardTerms.batch_amortized)
+BATCH_AMORTIZED_QUERIES = 8
+
 
 def choose_mode(n_terms: int, k: int) -> str:
     """Per-query strategy selection — the analog of the reference's
@@ -49,6 +53,10 @@ def choose_mode(n_terms: int, k: int) -> str:
       most of the term list, the OR→AND switch fires late or never, and
       the cascade degenerates to exhaustive plus overhead.
     - otherwise: block-max MaxScore cascade.
+
+    :func:`score_shard` consults this only for batches of at most
+    ``BATCH_AMORTIZED_QUERIES`` queries: a larger batch decodes every
+    matched list in full, so it is scored exhaustively without asking.
     """
     if n_terms <= 1 or k >= 256:
         return "exhaustive"
@@ -112,7 +120,7 @@ class ShardTerms:
         # with many queries in the batch, a term will almost surely be
         # probed again — decode it fully once and share, instead of
         # paying repeated selective block decodes (see contrib_at)
-        self.batch_amortized = batch_queries > 8
+        self.batch_amortized = batch_queries > BATCH_AMORTIZED_QUERIES
 
     def terms(self):
         return self.rows.keys()
@@ -229,8 +237,13 @@ def score_shard(
     resolve exactly as an engine ranking by the rounded value (the
     cross-engine determinism contract of the DuckDB oracles).
 
-    ``mode="auto"`` picks cascade/exhaustive per query via
-    :func:`choose_mode` (the reference's per-k parameter bands).
+    ``mode="auto"`` scores a batch of more than
+    ``BATCH_AMORTIZED_QUERIES`` queries exhaustively: such a batch
+    decodes every matched list in full (``ShardTerms.batch_amortized``),
+    so the cascade could skip no block and would only add its
+    bookkeeping. A smaller batch picks cascade/exhaustive per query via
+    :func:`choose_mode` (the reference's per-k parameter bands). Every
+    mode returns the same rows.
 
     ``shard_size`` enables the dense accumulator: doc-range sharding
     guarantees every docid in this group lies in
@@ -250,6 +263,8 @@ def score_shard(
     else:
         base = int(pdf["shard"].iloc[0]) * shard_size
     st = ShardTerms(pdf, tombstones, allowed, batch_queries=len(queries), base=base)
+    if mode == "auto" and st.batch_amortized:
+        mode = "exhaustive"  # nothing left to skip (see docstring)
     have = set(st.terms())
     buf = np.zeros(shard_size, dtype=np.float64)
     seen = np.zeros(shard_size, dtype=bool)

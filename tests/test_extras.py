@@ -151,6 +151,22 @@ def test_dedup_clusters_connected_components(spark):
         dedup.dedup_clusters(pairs, docs=docs, max_iter=1).collect()
 
 
+def test_dedup_clusters_releases_edge_cache_on_error(spark, monkeypatch):
+    """The persisted edge set is released when an iteration raises, not
+    only on the normal and non-converged exits."""
+    pairs = spark.createDataFrame(pd.DataFrame([(1, 2), (2, 3)], columns=["doc_a", "doc_b"]))
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def boom(self, eager=True):
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached + 1
+        raise RuntimeError("executor lost")
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="executor lost"):
+        dedup.dedup_clusters(pairs)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+
+
 def test_simhash_near_dups_are_close(dup_docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(dup_docs).collect()}
     assert sh[0] == sh[1] == sh[4]
@@ -548,3 +564,10 @@ def test_ivf_probe_cap_and_curve_fallback(emb):
     curve = [{"n_probe": 1, "recall": 0.3}, {"n_probe": 8, "recall": 0.6}]
     assert similarity.choose_n_probe(curve, 0.99, n_planes=24) == 8
     assert similarity.choose_n_probe([], 0.99, n_planes=24) == similarity.MAX_N_PROBE
+
+
+def test_probe_recall_curve_empty_probes(emb):
+    """No probe points → an empty curve, not a ValueError from a
+    zero-worker thread pool."""
+    q = emb.limit(2).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+    assert similarity.probe_recall_curve(emb, q, probes=[], n_planes=4, dim=16) == []
