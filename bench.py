@@ -95,7 +95,7 @@ def main() -> None:
                 n_rows[mode] = idx.search(qset, k=10, mode=mode).count()
                 dt = time.time() - t0
                 best[mode] = min(best.get(mode, dt), dt)
-            # the fully distributed (scatter-by-term, two-phase MaxScore)
+            # the fully distributed (scatter-by-term, single-phase join)
             # path on the same batch — regression-visible per round
             t0 = time.time()
             n_rows["join"] = idx.search_join(qdf, k=10).count()

@@ -52,13 +52,6 @@ class IndexConfig:
       in the manifest; query paths always tokenize with the INDEX's
       definition, and manifests from before the key existed resolve to
       ``"ascii"`` so old indexes keep their exact semantics.
-    - ``join_machinery_rows_per_core``: per-core row bar for
-      ``search_join``'s ``two_phase="auto"`` safety valve (see
-      ``plans/query.JOIN_MACHINERY_ROWS_PER_CORE``). ``None`` (default)
-      = the module constant calibrated for this box; deployments
-      recalibrate with ``scripts/calibrate_join.py`` and persist the
-      measured value here (or set the
-      ``PYLATE_JOIN_MACHINERY_ROWS_PER_CORE`` env var, which wins).
     """
 
     shard_size: int = 1 << 20
@@ -66,7 +59,6 @@ class IndexConfig:
     term_buckets: int = 64
     bm25: BM25Params = field(default_factory=BM25Params)
     tokenizer: str = "unicode"
-    join_machinery_rows_per_core: int | None = None
 
     @property
     def token_pattern(self) -> str:
@@ -80,8 +72,9 @@ class IndexConfig:
 
     @staticmethod
     def from_dict(d: dict) -> "IndexConfig":
+        # keys not read here are ignored: older manifests still carry
+        # the removed search_join plan-choice knob
         bm = d.get("bm25", {})
-        jm = d.get("join_machinery_rows_per_core")
         return IndexConfig(
             shard_size=int(d["shard_size"]),
             block_size=int(d["block_size"]),
@@ -89,7 +82,6 @@ class IndexConfig:
             bm25=BM25Params(k1=float(bm.get("k1", 1.2)), b=float(bm.get("b", 0.75))),
             # manifests from before the key existed were built ascii
             tokenizer=str(d.get("tokenizer", "ascii")),
-            join_machinery_rows_per_core=int(jm) if jm is not None else None,
         )
 
 

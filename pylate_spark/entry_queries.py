@@ -191,8 +191,8 @@ def q_bm25_join_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed path's allow-list: candidates restricted to
     docid % 3 == 0 with global corpus stats — must hash-match the same
     subset oracle as the kernel/scan paths (reference semantics,
-    fast_plaid.py:318-340), exercising the subset semi-join on every
-    decode leg of the two-phase plan."""
+    fast_plaid.py:318-340), exercising the subset semi-join on the
+    decoded postings."""
     from pylate_spark.plans.query import InvertedIndex
 
     idx = InvertedIndex(spark, _indexed(spark, sf_dir))

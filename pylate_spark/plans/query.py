@@ -22,7 +22,6 @@ Entry points:
 
 from __future__ import annotations
 
-import os
 import zlib
 
 import numpy as np
@@ -78,22 +77,6 @@ SUBSET_BROADCAST_THRESHOLD = 4096
 #: count; a broadcast ships it to each executor once (same treatment
 #: the subset allow-list got)
 QUERYSET_BROADCAST_THRESHOLD = 4096
-
-#: search_join "auto" two-phase bar, in avoided-replication rows PER
-#: CORE. Round-5 calibration (PLANS.md §9b, bench corpus, 200k docs /
-#: local[32], head_saved → single-phase vs two-phase seconds):
-#: 3.8M → 5.5 / 13.1 · 22M → 11.0 / 18.8 · 61M → 32.3 / 26.3 ·
-#: 255M → 117 / 168. Two-phase wins only a NARROW mid window at this
-#: scale (its candidate joins and unbounded-query legs grow with the
-#: batch as well), and its best measured win is 1.2× — while the
-#: hazard it exists for is unbounded (a stopword's df × 10^5-query
-#: fan-out at web scale cannot be joined single-phase at all). The
-#: risk is asymmetric, so "auto" is a SAFETY VALVE, not a marginal
-#: optimizer: it stays single-phase until the avoided replication is
-#: ~10× the measured machinery cost (≈400M rows at 32 cores — every
-#: measured point below it single-phase wins or loses ≤1.4×; a true
-#: web-scale blow-up exceeds it by orders of magnitude).
-JOIN_MACHINERY_ROWS_PER_CORE = 12_500_000
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Global top-k merge: score desc, docid asc tie-break.
@@ -151,7 +134,6 @@ class InvertedIndex:
         self._qset_bc = None
         #: last search()'s kernel, for lazy closure-size observability
         self._last_kernel = None
-        self._last_join_two_phase: bool | None = None
         #: queries are always tokenized with the INDEX's persisted
         #: token definition (IndexConfig.tokenizer) — a query must see
         #: the terms the build wrote
@@ -164,19 +146,6 @@ class InvertedIndex:
                 "pylate_spark.plans.maintenance.compact() to rewrite segments",
                 stacklevel=2,
             )
-
-    def _join_machinery_rows_per_core(self) -> int:
-        """The ``two_phase="auto"`` safety-valve bar, resolved per
-        deployment: ``PYLATE_JOIN_MACHINERY_ROWS_PER_CORE`` env var >
-        ``IndexConfig.join_machinery_rows_per_core`` (persisted in the
-        manifest at build time) > the module default calibrated on this
-        box (``scripts/calibrate_join.py`` re-measures it)."""
-        env = os.environ.get("PYLATE_JOIN_MACHINERY_ROWS_PER_CORE")
-        if env:
-            return int(env)
-        if self.config.join_machinery_rows_per_core is not None:
-            return int(self.config.join_machinery_rows_per_core)
-        return JOIN_MACHINERY_ROWS_PER_CORE
 
     # -- id resolution (the reference's id<->docid pickles,
     #    fast_plaid.py:136-174) ------------------------------------
@@ -381,50 +350,12 @@ class InvertedIndex:
 
         return len(cloudpickle.dumps(self._last_kernel))
 
-    def _decoded_postings(
-        self,
-        terms_df: DataFrame,
-        subset_df: DataFrame | None,
-        buckets: list[int] | None = None,
-    ) -> DataFrame:
-        """Semi-join-pruned segment scan → ``mapInPandas`` posting
-        decode → tombstone anti-join (→ subset semi-join). The one
-        decode leg of every search_join phase. ``buckets`` (the query
-        terms' hash buckets, ≤ ``term_buckets`` ints collected as one
-        aggregate row by search_join) lands as a literal partition
-        filter on the scan — the same ``bucket IN (...)`` pruning
-        search() does, chosen over dynamic partition pruning because
-        Spark's DPP rule declines when the filtering side has no
-        selective predicate (a query batch is a scan, not a filter),
-        and a literal IN prunes at planning time unconditionally."""
-        from pylate_spark import storage
-        from pylate_spark.plans.segments import decode_postings_gen
-
-        seg = self._seg
-        if buckets is not None:
-            seg = seg.where(in_list("bucket", buckets))
-        seg = seg.join(terms_df, "term", "left_semi").select(
-            "term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off"
-        )
-        postings = seg.mapInPandas(
-            decode_postings_gen, schema="term string, docid long, tf long, dl long"
-        )
-        tomb_dir = active_dir(self.paths, self.manifest, "tombstones")
-        if storage.exists(tomb_dir):
-            tomb = self.spark.read.parquet(tomb_dir).select("docid").distinct()
-            postings = postings.join(tomb, "docid", "left_anti")
-        if subset_df is not None:
-            postings = postings.join(subset_df, "docid", "left_semi")
-        return postings
-
     def search_join(
         self,
         queries: DataFrame,
         k: int = 10,
         round_to: int | None = None,
         subset: list[int] | np.ndarray | None = None,
-        two_phase: bool | str = "auto",
-        head_df_cutoff: int | None = None,
     ) -> DataFrame:
         """Fully distributed query path — scatter by TERM instead of by
         shard, with NOTHING on the driver: tokenization is a
@@ -445,14 +376,18 @@ class InvertedIndex:
         shuffle, which exceeded BOTH a 126 GB tmpfs spill (OS
         OOM-killed at 57 GB JVM RSS, 16 g and 64 g heaps alike) and
         75 GB of disk; the largest completed point, 2×10³ queries, ran
-        946 s vs the kernel's 26 s (~40 GB peak spill, ``auto``
-        correctly two-phase). So the single-node crossover DOES NOT
-        EXIST — not for lack of cores but of shuffle capacity. This
-        path is for a MULTI-EXECUTOR cluster, where the same exchanges
-        distribute across many nodes' memory/disks and the kernel
-        path's one real ceiling — the driver collecting/tokenizing/
-        broadcasting a 10⁷⁺-query map — binds first. On one box, use
-        :meth:`search`; it plans driver-side (collect + tokenize + one
+        946 s vs the kernel's 26 s (~40 GB peak spill, under the
+        since-removed two-phase plan). So the single-node crossover
+        DOES NOT EXIST — not for lack of cores but of shuffle capacity.
+        A 4-vCPU host shows the same shape (50k-doc synth index,
+        ``round_to=4``, wall s per call, this path vs
+        ``search(mode="exhaustive")``): 100 queries 4.4–6.1 s vs
+        1.1–1.7 s, 2,000 queries 43–60 s vs 2.3–3.2 s. This path is for
+        a MULTI-EXECUTOR cluster, where the same exchanges distribute
+        across many nodes' memory/disks and the kernel path's one real
+        ceiling — the driver collecting/tokenizing/broadcasting a
+        10⁷⁺-query map — binds first. On one box, use :meth:`search`;
+        it plans driver-side (collect + tokenize + one
         closure/broadcast), the same trade the reference makes at its
         own batching scale (50/probe, ``retrieve/base.py:98-105``).
 
@@ -462,69 +397,17 @@ class InvertedIndex:
         distributed (a semi-join on docid instead of a sorted-array
         mask).
 
-        ``two_phase`` bounds the head-term fan-out hazard: a naive
-        ``postings ⋈ queries ON term`` replicates a stopword's ~N-row
-        posting list once per query containing it. ``"auto"`` (default)
-        is a cost-based choice from AGGREGATE statistics only (one
-        per-term distributed agg over ≤ |distinct query terms| rows,
-        ONE scalar row to the driver — never query data): engage the
-        two-phase plan iff the replicated head rows it avoids
-        (Σ_head df·n_queries_sharing − Σ_head df) exceed the phase-1
-        rows it re-shuffles anyway PLUS a deliberately HIGH machinery
-        bar (``JOIN_MACHINERY_ROWS_PER_CORE`` × cores). The bar is a
-        safety valve, not a marginal optimizer: round-5 calibration
-        (PLANS.md §9b) measured two-phase winning only a narrow mid
-        window (best 1.2×) at bench scale while losing up to 2.4×
-        outside it — but the hazard it guards against is unbounded
-        (a web-scale stopword's df × fan-out cannot be joined
-        single-phase at all), so the plan flips only when the avoided
-        replication is catastrophic, where two-phase wins by
-        construction. The two-phase plan is the reference's
-        shrinking-budget cascade (``index_storage.py:186-204``) made
-        EXACT at the plan level — distributed MaxScore:
-
-        1. score only RARE terms (df ≤ ``head_df_cutoff``, default
-           ``max(256, n_docs // 20)``) with the plain term join;
-        2. θ_q = the k-th best phase-1 partial score per query (a lower
-           bound on the true k-th best total), and hub_q = Σ upper
-           bounds of q's head terms, from segment BLOCK METADATA only
-           (max_tf/min_dl aggregated per term — no payload decode);
-        3. a phase-1 candidate survives iff partial + hub_q ≥ θ_q − ε
-           (every true top-k doc does: its partial ≥ its total − hub ≥
-           θ − ε); head postings then join the surviving (candidate ×
-           head-term) set ON (term, docid) — output bounded by that
-           small set, the stopword posting list is scanned ONCE and
-           never replicated per query;
-        4. only queries where hub_q ≥ θ_q − ε ("unbounded": stopword-only
-           queries, or < k phase-1 candidates) fall back to the full
-           head-term join — and for those, no phase-1 candidate is ever
-           pruned (partial + hub ≥ hub ≥ θ − ε), so every emitted score
-           is the exact full sum. ε = 2·10^−round_to (the kernel's
-           rounded-rank margin, plans/wand.py) or 1e-3 for raw-float
-           emit — pruning is only ever made MORE conservative by it.
-
-        Each phase decodes its own semi-join-pruned segment leg. Rare
-        terms are decoded once (phase 1 only); a head term is decoded
-        once for phase 2a and — when some query is unbounded — its
-        postings appear again in phase 2b's leg, which is semi-join-
-        pruned to exactly the unbounded queries' terms (so the
-        duplicated decode is bounded by the stopword-only queries'
-        term set, usually empty; results are exact either way because
-        the bounded/unbounded query sets are disjoint). With AQE on, a
-        phase whose build side is empty (no head terms / no unbounded
-        queries) is eliminated at runtime without touching its scan.
-
         Determinism contract (same as :func:`assign_docids`): the
         ``queries`` input is evaluated once up front and pinned with a
-        lazy ``localCheckpoint``, so the plan-choice estimate, the
-        bucket allow-list, and every scoring leg see the SAME tokenized
-        batch even if the input is nondeterministic (unseeded sample,
-        mutating view) — re-read skew cannot silently drop postings.
-        Caveat on non-local masters: localCheckpoint blocks are
-        NON-recomputable — losing an executor mid-query (dynamic
-        allocation, spot nodes) fails the job with a missing-checkpoint
-        -block error instead of recomputing; on such clusters prefer a
-        reliable checkpoint dir or persist+materialize for the pin.
+        lazy ``localCheckpoint``, so the bucket allow-list and the
+        scoring join see the SAME tokenized batch even if the input is
+        nondeterministic (unseeded sample, mutating view) — re-read
+        skew cannot silently drop postings. Caveat on non-local
+        masters: localCheckpoint blocks are NON-recomputable — losing
+        an executor mid-query (dynamic allocation, spot nodes) fails
+        the job with a missing-checkpoint-block error instead of
+        recomputing; on such clusters prefer a reliable checkpoint dir
+        or persist+materialize for the pin.
 
         Input contract: ``query_id`` rows must be unique. Duplicate
         rows for one query_id produce duplicate (query_id, term) pairs
@@ -534,28 +417,27 @@ class InvertedIndex:
         driver-side qmap silently keeps one row per id. Dedup upstream
         (``dropDuplicates(["query_id"])``) if the source can repeat ids.
 
-        Plan shape: the matched terms' hash buckets (≤ ``term_buckets``
-        ints, one aggregate row fused with the plan-choice estimate)
-        literal-prune every segment scan's partition filter — the same
-        ``bucket IN (...)`` pruning search() does; query terms then
-        semi-join-prune the surviving files and the term_stats read
-        (both ≤ |distinct query terms| rows after pruning — AQE
+        Plan shape: one pre-job collects the query terms' hash buckets
+        (≤ ``term_buckets`` ints, one aggregate row) that literal-prune
+        the segment scan's partition filter — the same ``bucket IN
+        (...)`` pruning search() does (Spark's DPP rule declines here:
+        a query batch is a scan, not a selective filter). Query terms
+        then semi-join-prune the surviving segment files and the
+        term_stats read (both ≤ |distinct query terms| rows — AQE
         broadcasts them when small, shuffles on ``term`` when not);
-        decoded postings anti-join tombstones; (query_id, docid)
-        partial-agg shuffles; WindowGroupLimit-bounded top-k merge
-        (same final merge as search()).
+        decoded postings anti-join tombstones (→ semi-join the subset);
+        (query_id, docid) partial-agg shuffles; WindowGroupLimit-bounded
+        top-k merge (same final merge as search()).
         """
+        from pylate_spark import storage
+        from pylate_spark.plans.segments import decode_postings_gen
+
         # (query_id, term) pairs, unique per query by construction:
         # array_distinct dedups INSIDE the tokenize projection (BM25
-        # sums each query term once), so qt needs no global distinct —
-        # the old ``.distinct()`` was a full shuffle of the batch.
-        # lazy localCheckpoint: materialized by the first job (the
-        # estimate/bucket collect below), then every later subplan
-        # reference — phase legs, the final merge — reuses the pinned
-        # rows instead of re-running the tokenize UDF (the plan appears
-        # 6+ times in the two-phase form; re-evaluating it per
-        # reference was a measurable slice of the path's constant, and
-        # the determinism contract above requires a single read).
+        # sums each query term once), so qt needs no global distinct.
+        # lazy localCheckpoint: materialized by the bucket pre-job, then
+        # reused by the scoring join — the determinism contract above
+        # requires a single read of ``queries``.
         qt = (
             queries.select(
                 F.col("query_id").cast("long").alias("query_id"),
@@ -565,208 +447,61 @@ class InvertedIndex:
             )
             .localCheckpoint(eager=False)
         )
-        # duplicate terms across queries are fine everywhere this is
-        # used: semi-joins dedup by construction, the estimate
-        # aggregates per term, collect_set dedups buckets
+        # duplicate terms across queries are fine: semi-joins and
+        # collect_set dedup by construction
         terms = qt.select("term")
-        # ≤ |distinct query terms| rows after the semi-join — pinned
-        # for the same reason (referenced by the estimate, the scoring
-        # join, and the two-phase metadata leg; each reference would
-        # otherwise re-scan the term_stats parquet)
-        stats = (
-            self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
-            .join(terms, "term", "left_semi")
-            .select("term", "df")
-            .localCheckpoint(eager=False)
+        # ONE aggregate row to the driver (never query data): the query
+        # terms' hash-bucket set. Buckets of terms absent from the
+        # corpus only widen the IN list.
+        bucket_col = (
+            F.crc32(F.col("term")) % F.lit(self.config.term_buckets)
+        ).cast("int")
+        buckets = sorted(
+            terms.select(bucket_col.alias("bucket"))
+            .agg(F.collect_set("bucket").alias("buckets"))
+            .collect()[0]["buckets"]
+            or []
         )
-        subset_df = None
+
+        seg = (
+            self._seg.where(in_list("bucket", buckets))
+            .join(terms, "term", "left_semi")
+            .select("term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off")
+        )
+        postings = seg.mapInPandas(
+            decode_postings_gen, schema="term string, docid long, tf long, dl long"
+        )
+        tomb_dir = active_dir(self.paths, self.manifest, "tombstones")
+        if storage.exists(tomb_dir):
+            tomb = self.spark.read.parquet(tomb_dir).select("docid").distinct()
+            postings = postings.join(tomb, "docid", "left_anti")
         if subset is not None:
             subset_df = self.spark.createDataFrame(
                 [(int(d),) for d in subset], "docid long"
             ).distinct()
+            postings = postings.join(subset_df, "docid", "left_semi")
+
+        stats = (
+            self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
+            .join(terms, "term", "left_semi")
+            .select("term", "df")
+        )
         contrib = bm25_score_col(
             F.col("tf"), F.col("dl"), F.col("df"),
             float(self.n_docs), self.avgdl, self.config.bm25,
         )
-
-        def finish(scored: DataFrame) -> DataFrame:
-            if round_to is not None:
-                out = scored.withColumn("score", F.round(F.col("score_d"), round_to))
-            else:
-                out = scored.withColumn("score", F.col("score_d").cast("float"))
-            return _rank_topk(out.drop("score_d"), k)
-
-        cutoff = head_df_cutoff if head_df_cutoff is not None else max(256, self.n_docs // 20)
-        bucket_col = (
-            F.crc32(F.col("term")) % F.lit(self.config.term_buckets)
-        ).cast("int")
-        if two_phase == "auto":
-            # ONE aggregate row to the driver (never query data): the
-            # plan-choice cost estimate AND the matched terms'
-            # hash-bucket set (≤ term_buckets ints) that literal-prunes
-            # every segment scan below — fused so plan choice +
-            # partition pruning cost a single tiny job regardless of
-            # batch size.
-            est = (
-                qt.join(stats, "term")
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("nq"), F.first("df").alias("df"))
-                .withColumn("bucket", bucket_col)
-                .agg(
-                    F.sum(
-                        F.when(F.col("df") > cutoff, F.col("df") * (F.col("nq") - 1))
-                        .otherwise(F.lit(0))
-                    ).alias("head_saved"),
-                    F.sum(
-                        F.when(F.col("df") <= cutoff, F.col("df") * F.col("nq"))
-                        .otherwise(F.lit(0))
-                    ).alias("rare_repl"),
-                    F.collect_set("bucket").alias("buckets"),
-                )
-                .collect()[0]
-            )
-            buckets = sorted(est["buckets"] or [])
-            machinery = self._join_machinery_rows_per_core() * (
-                self.spark.sparkContext.defaultParallelism
-            )
-            two_phase = (
-                (est["head_saved"] or 0) > (est["rare_repl"] or 0) + machinery
-            )
-        else:
-            # explicit two_phase: the caller opted out of the cost
-            # estimate, so the pre-job shrinks to the bucket allow-list
-            # alone — no term_stats scan, no stats join. Buckets of
-            # terms absent from the corpus only widen the IN list
-            # (their partitions hold no matching postings).
-            est = (
-                terms.select(bucket_col.alias("bucket"))
-                .agg(F.collect_set("bucket").alias("buckets"))
-                .collect()[0]
-            )
-            buckets = sorted(est["buckets"] or [])
-        # observability (test/debug): which plan the last call ran
-        self._last_join_two_phase = bool(two_phase)
-
-        if not two_phase:
-            postings = self._decoded_postings(terms, subset_df, buckets)
-            scored = (
-                postings.join(qt, "term")
-                .join(stats, "term")
-                .withColumn("contrib", contrib)
-                .groupBy("query_id", "docid")
-                .agg(F.sum("contrib").alias("score_d"))
-            )
-            return finish(scored)
-
-        # per-term TRUE upper bound from block metadata only (payload
-        # column pruned away): idf · tfn(max max_tf, min min_dl) — the
-        # same UB the kernel uses per shard (plans/wand.ShardTerms),
-        # here aggregated globally per term
-        meta = (
-            self._seg.where(in_list("bucket", buckets))
-            .join(terms, "term", "left_semi")
-            .groupBy("term")
-            .agg(
-                F.max(F.array_max("b_max_tf")).alias("ub_tf"),
-                F.min(F.array_min("b_min_dl")).alias("ub_dl"),
-            )
-        )
-        tstats = stats.join(meta, "term").select(
-            "term",
-            "df",
-            bm25_score_col(
-                F.col("ub_tf"), F.col("ub_dl"), F.col("df"),
-                float(self.n_docs), self.avgdl, self.config.bm25,
-            ).alias("ub"),
-            (F.col("df") > cutoff).alias("is_head"),
-        )
-        qts = qt.join(tstats, "term")  # (query_id, term, df, ub, is_head)
-        qt_r = qts.where(~F.col("is_head")).select("query_id", "term", "df")
-        qt_h = qts.where(F.col("is_head")).select("query_id", "term", "df", "ub")
-
-        # phase 1: rare terms, plain term scatter
-        post_r = self._decoded_postings(
-            tstats.where(~F.col("is_head")).select("term"), subset_df, buckets
-        )
-        partial = (
-            post_r.join(qt_r, "term")
-            .withColumn("c", contrib)
-            .groupBy("query_id", "docid")
-            .agg(F.sum("c").alias("partial"))
-        )
-
-        # per-query pruning state: θ (k-th best partial) and hub (head
-        # UB sum) — both ≤ |queries| rows, never corpus-sized
-        wq = Window.partitionBy("query_id").orderBy(F.desc("partial"), F.asc("docid"))
-        theta = (
-            partial.withColumn("rn", F.row_number().over(wq))
-            .where(F.col("rn") == k)
-            .select("query_id", F.col("partial").alias("theta"))
-        )
-        hub = qt_h.groupBy("query_id").agg(F.sum("ub").alias("hub"))
-        eps = 2 * 10.0 ** (-round_to) if round_to is not None else 1e-3
-        qmeta = (
-            qt.select("query_id").distinct()
-            .join(theta, "query_id", "left")
-            .join(hub, "query_id", "left")
-            .select(
-                "query_id",
-                F.coalesce("theta", F.lit(float("-inf"))).alias("theta"),
-                F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            )
-            .withColumn("bounded", F.col("hub") < F.col("theta") - F.lit(eps))
-        )
-        cands = (
-            partial.join(qmeta, "query_id")
-            .where(F.col("partial") + F.col("hub") >= F.col("theta") - F.lit(eps))
-            .select("query_id", "docid", "partial", "bounded")
-        )
-
-        # phase 2a (bounded queries): head postings keyed by (term,
-        # docid) against the small surviving candidate × head-term set —
-        # a stopword's posting list is scanned once, never replicated
-        cand_ht = (
-            cands.where(F.col("bounded")).select("query_id", "docid")
-            .join(qt_h.select("query_id", "term", "df"), "query_id")
-        )
-        post_h = self._decoded_postings(
-            tstats.where(F.col("is_head")).select("term"), subset_df, buckets
-        )
-        c2b = (
-            post_h.join(cand_ht, ["term", "docid"])
-            .withColumn("c", contrib)
-            .select("query_id", "docid", "c")
-        )
-        # phase 2b (unbounded queries — stopword-only or < k phase-1
-        # candidates): exactness requires the full head join for these
-        # queries ONLY; its decode leg is pruned to their terms and AQE
-        # eliminates it when no query is unbounded
-        qt_h_un = qt_h.join(
-            qmeta.where(~F.col("bounded")).select("query_id"), "query_id"
-        ).select("query_id", "term", "df")
-        post_h_un = self._decoded_postings(
-            qt_h_un.select("term").distinct(), subset_df, buckets
-        )
-        c2u = (
-            post_h_un.join(qt_h_un, "term")
-            .withColumn("c", contrib)
-            .select("query_id", "docid", "c")
-        )
-        contrib2 = (
-            c2b.unionByName(c2u).groupBy("query_id", "docid").agg(F.sum("c").alias("s2"))
-        )
         scored = (
-            cands.select("query_id", "docid", "partial")
-            .join(contrib2, ["query_id", "docid"], "full_outer")
-            .select(
-                "query_id",
-                "docid",
-                (F.coalesce("partial", F.lit(0.0)) + F.coalesce("s2", F.lit(0.0))).alias(
-                    "score_d"
-                ),
-            )
+            postings.join(qt, "term")
+            .join(stats, "term")
+            .withColumn("contrib", contrib)
+            .groupBy("query_id", "docid")
+            .agg(F.sum("contrib").alias("score_d"))
         )
-        return finish(scored)
+        if round_to is not None:
+            scored = scored.withColumn("score", F.round(F.col("score_d"), round_to))
+        else:
+            scored = scored.withColumn("score", F.col("score_d").cast("float"))
+        return _rank_topk(scored.drop("score_d"), k)
 
 
 def bm25_scan_topk(
@@ -790,6 +525,13 @@ def bm25_scan_topk(
     global — the reference's subset semantics, fast_plaid.py:318-340);
     ``conjunctive`` keeps only docs matching every query term (AND
     mode; BM25 default is disjunctive).
+
+    The query-term postings are pinned with a lazy ``localCheckpoint``
+    (see below). Caveat on non-local masters: localCheckpoint blocks
+    are NON-recomputable — losing an executor mid-query (dynamic
+    allocation, spot nodes) fails the job with a missing-checkpoint
+    -block error instead of recomputing; on such clusters prefer a
+    reliable checkpoint dir or persist+materialize for the pin.
     """
     from pylate_spark.functions.tokenize import native_tokens_col
 

@@ -10,7 +10,7 @@ import pytest
 
 from pylate_spark.config import BM25Params, IndexConfig
 from pylate_spark.oracle import OracleIndex
-from pylate_spark.plans.build import build_index
+from pylate_spark.plans.build import IndexPaths, build_index
 from pylate_spark.plans.query import InvertedIndex, bm25_scan_topk
 
 K = 10
@@ -225,6 +225,57 @@ def test_search_join_rank_identical(spark, built_index, queries_pdf):
     want = _collect_ranked(idx.search(qs, k=K, mode="exhaustive", round_to=4))
     assert got == want
 
+    # degenerate batches: no queries, or no query matching an indexed
+    # term, give zero rows on both paths with the same column types —
+    # a float score by default, a double one under round_to
+    empty: list[tuple[int, str]] = []
+    absent = [(0, "zzzznotaword"), (1, ""), (2, "   "), (3, "qqqabsent zzzznotaword")]
+    for rows in (empty, absent):
+        qdf = spark.createDataFrame(rows, "query_id long, text string")
+        for round_to in (None, 4):
+            got_df = idx.search_join(qdf, k=K, round_to=round_to)
+            want_df = idx.search(rows, k=K, mode="exhaustive", round_to=round_to)
+            assert got_df.collect() == [] and want_df.collect() == [], (rows, round_to)
+            assert got_df.dtypes == want_df.dtypes == [
+                ("query_id", "bigint"),
+                ("rank", "int"),
+                ("docid", "bigint"),
+                ("score", "float" if round_to is None else "double"),
+            ], (rows, round_to)
+
+
+def test_search_join_opens_manifest_with_removed_config_key(
+    spark, built_index, queries_pdf, tmp_path
+):
+    """Manifests written before search_join lost its plan-choice knob
+    carry ``join_machinery_rows_per_core`` in ``config``. Such an
+    index must still open, and search exactly as without the key."""
+    import json
+    import shutil
+
+    d, _ = built_index
+    qdf = spark.createDataFrame(queries_pdf.iloc[:6])
+    qs = list(zip(queries_pdf["query_id"].tolist()[:6], queries_pdf["text"].tolist()[:6]))
+    base = InvertedIndex(spark, d)
+    want_join = _collect_ranked(base.search_join(qdf, k=K, round_to=4))
+    want = _collect_ranked(base.search(qs, k=K, round_to=4))
+    for value in (None, 12_500_000):
+        d2 = str(tmp_path / f"old_manifest_{value}")
+        shutil.copytree(d, d2)
+        mpath = IndexPaths(d2).manifest
+        with open(mpath) as f:
+            manifest = json.load(f)
+        manifest["config"]["join_machinery_rows_per_core"] = value
+        assert IndexConfig.from_dict(manifest["config"]) == IndexConfig.from_dict(
+            base.manifest["config"]
+        )
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+        idx = InvertedIndex(spark, d2)
+        assert idx.config == base.config
+        assert _collect_ranked(idx.search_join(qdf, k=K, round_to=4)) == want_join
+        assert _collect_ranked(idx.search(qs, k=K, round_to=4)) == want
+
 
 def test_search_join_after_delete(spark, built_index, queries_pdf, tmp_path):
     import shutil
@@ -247,66 +298,12 @@ def test_search_join_after_delete(spark, built_index, queries_pdf, tmp_path):
     assert not any(r[2] == top for r in got if r[0] == qs[0][0])
 
 
-@pytest.mark.parametrize("cutoff", [0, 5, 10**9])
-def test_search_join_two_phase_cutoff_sweep(spark, built_index, queries_pdf, cutoff):
-    """The two-phase MaxScore plan must be exact at EVERY head/rare
-    split: cutoff=0 routes every term through the head phase (all
-    queries take the unbounded leg), 10^9 routes everything through
-    phase 1 (pure rare scatter), 5 mixes both legs — all three must be
-    rank-identical to the exhaustive kernel path."""
-    d, _ = built_index
-    idx = InvertedIndex(spark, d)
-    qdf = spark.createDataFrame(queries_pdf.iloc[:12])
-    qs = list(zip(queries_pdf["query_id"].tolist()[:12], queries_pdf["text"].tolist()[:12]))
-    got = _collect_ranked(
-        idx.search_join(qdf, k=K, round_to=4, two_phase=True, head_df_cutoff=cutoff)
-    )
-    want = _collect_ranked(idx.search(qs, k=K, mode="exhaustive", round_to=4))
-    assert got == want
-
-
-def test_search_join_auto_plan_choice(spark, built_index, queries_pdf, monkeypatch):
-    """``two_phase="auto"`` is a cost-based choice from aggregate term
-    stats only. Forcing the cutoff to the extremes pins both outcomes:
-    cutoff=10^9 → no head terms → the estimator's head savings are 0 →
-    single-phase; cutoff=0 → every shared term is a head term with
-    positive fan-out savings → two-phase once the (calibrated,
-    bench-scale) machinery constant is zeroed — a test corpus's few
-    thousand replicated rows must NOT clear the real ~1.25M/core bar,
-    which is itself the third pinned outcome. All plans must stay
-    rank-identical to the exhaustive kernel path."""
-    import pylate_spark.plans.query as Q
-
-    d, _ = built_index
-    idx = InvertedIndex(spark, d)
-    qdf = spark.createDataFrame(queries_pdf.iloc[:12])
-    qs = list(zip(queries_pdf["query_id"].tolist()[:12], queries_pdf["text"].tolist()[:12]))
-    want = _collect_ranked(idx.search(qs, k=K, mode="exhaustive", round_to=4))
-
-    got1 = _collect_ranked(idx.search_join(qdf, k=K, round_to=4, head_df_cutoff=10**9))
-    assert idx._last_join_two_phase is False
-    assert got1 == want
-
-    # at the real machinery constant, a tiny corpus NEVER warrants
-    # two-phase even with every term classed as head
-    got2 = _collect_ranked(idx.search_join(qdf, k=K, round_to=4, head_df_cutoff=0))
-    assert idx._last_join_two_phase is False
-    assert got2 == want
-
-    # zero the machinery bar → the estimator's stats-driven flip shows
-    monkeypatch.setattr(Q, "JOIN_MACHINERY_ROWS_PER_CORE", 0)
-    got3 = _collect_ranked(idx.search_join(qdf, k=K, round_to=4, head_df_cutoff=0))
-    assert idx._last_join_two_phase is True
-    assert got3 == want
-
-
 def test_search_join_segment_scan_is_bucket_pruned(spark, built_index, queries_pdf):
     """The query terms' hash buckets must land as a literal IN-list in
     the segment scan's PartitionFilters (segments are written
     partitionBy(batch, bucket)) — the same directory-level pruning
     search() gets, proven here for the distributed path where DPP
-    would decline (the terms side has no selective predicate). Checked
-    on BOTH plan variants so neither regresses to a full layout scan."""
+    would decline (the terms side has no selective predicate)."""
     import contextlib
     import io
     import re
@@ -314,26 +311,24 @@ def test_search_join_segment_scan_is_bucket_pruned(spark, built_index, queries_p
     d, _ = built_index
     idx = InvertedIndex(spark, d)
     qdf = spark.createDataFrame(queries_pdf.iloc[:4])
-    for cutoff in (10**9, 0):  # single-phase and two-phase plans
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            idx.search_join(qdf, k=K, head_df_cutoff=cutoff).explain("formatted")
-        plan = buf.getvalue()
-        hits = re.findall(r"PartitionFilters: \[([^\]]*bucket[^\]]*)\]", plan)
-        assert hits, (cutoff, plan)  # bucket IN-list reached the scan
-        # every segment scan leg in the plan is pruned, none full-scan
-        seg_scans = [
-            s for s in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-            if "batch" in s or "bucket" in s
-        ]
-        assert seg_scans and all("bucket" in s for s in seg_scans), (cutoff, plan)
-        assert all(re.search(r"bucket.* (IN |INSET )", s) for s in hits), hits
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        idx.search_join(qdf, k=K).explain("formatted")
+    plan = buf.getvalue()
+    hits = re.findall(r"PartitionFilters: \[([^\]]*bucket[^\]]*)\]", plan)
+    assert hits, plan  # bucket IN-list reached the scan
+    # every segment scan in the plan is pruned, none full-scan
+    seg_scans = [
+        s for s in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        if "batch" in s or "bucket" in s
+    ]
+    assert seg_scans and all("bucket" in s for s in seg_scans), plan
+    assert all(re.search(r"bucket.* (IN |INSET )", s) for s in hits), hits
 
 
 def test_search_join_subset_parity(spark, built_index, pages_t2_pdf, queries_pdf):
     """search_join(subset=) must equal search(subset=) — the kernel
-    path's allow-list (fast_plaid.py:318-340) on the distributed path,
-    including through the two-phase split."""
+    path's allow-list (fast_plaid.py:318-340) on the distributed path."""
     d, _ = built_index
     idx = InvertedIndex(spark, d)
     allowed = list(range(0, len(pages_t2_pdf), 3))
@@ -342,14 +337,6 @@ def test_search_join_subset_parity(spark, built_index, pages_t2_pdf, queries_pdf
     got = _collect_ranked(idx.search_join(qdf, k=K, round_to=4, subset=allowed))
     want = _collect_ranked(idx.search(qs, k=K, mode="exhaustive", round_to=4, subset=allowed))
     assert got == want
-    # and with a forced head split, so the subset semi-join is exercised
-    # on all three decode legs
-    got2 = _collect_ranked(
-        idx.search_join(
-            qdf, k=K, round_to=4, subset=allowed, two_phase=True, head_df_cutoff=3
-        )
-    )
-    assert got2 == want
 
 
 def test_staging_plan_single_exchange_single_udf(spark, pages_t2):
